@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..utils import local_frame
+
 
 def _q4(c: Column) -> Column:
     return F.floor(c * 1e4 + 0.500000001) / 1e4
@@ -371,8 +373,10 @@ def psi_vs_reference_by_group(
     groups = cell.groupBy("_g").agg(F.sum("_c").alias("_n"))
     # full bin grid per group: groups × bins rows, both sides tiny
     spark = df.sparkSession
-    bins_df = spark.createDataFrame(
-        [(i, int(ref_counts[i])) for i in range(bins)], ["_b", "_cr"]
+    bins_df = local_frame(
+        spark,
+        [(i, int(ref_counts[i])) for i in range(bins)],
+        "_b long, _cr long",
     )
     grid = groups.crossJoin(F.broadcast(bins_df))
     joined = grid.join(cell, ["_g", "_b"], "left").select(

@@ -32,6 +32,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..utils import local_frame
+
 HASH_DEN = 10_000  # bucket resolution: rates are exact multiples of 0.01%
 
 
@@ -169,7 +171,7 @@ def stratified_sample(
     """
     spark = df.sparkSession
     rate_rows = [(k, round(v * HASH_DEN)) for k, v in sorted(rates.items())]
-    rate_df = spark.createDataFrame(rate_rows, f"{stratum} string, _thresh int")
+    rate_df = local_frame(spark, rate_rows, f"`{stratum}` string, _thresh int")
     joined = df.join(F.broadcast(rate_df), on=stratum, how="left")
     thresh = F.coalesce(F.col("_thresh"), F.lit(round(default_rate * HASH_DEN)))
     return joined.filter(hash_bucket(F.col(key), seed) < thresh).drop("_thresh")
@@ -914,7 +916,8 @@ def quantile_normalize_by_group(
         out="_r",
     )
     gtype = df.schema[group_col].dataType
-    nper = df.sparkSession.createDataFrame(
+    nper = local_frame(
+        df.sparkSession,
         [(r[group_col], int(r["_n"])) for r in st],
         T.StructType(
             [

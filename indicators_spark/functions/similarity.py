@@ -39,6 +39,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..utils import local_frame
+
 
 def dot(a: Column, b: Column) -> Column:
     """Σ a[i]·b[i] as a left-to-right JVM fold (order matches the oracle)."""
@@ -1811,8 +1813,8 @@ def covariance_matrix(
         if probe is None:
             # empty input: nothing to measure — return an empty frame with
             # the output schema instead of crashing on None[0]
-            return df.sparkSession.createDataFrame(
-                [], "i int, j int, cov double"
+            return local_frame(
+                df.sparkSession, [], "i int, j int, cov double"
             )
         dim = len(probe[0])
 
@@ -2402,10 +2404,11 @@ def kcenter_select(
                 )
             )
     spark = df.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (r + 1, cid, rad)
             for r, (cid, _, rad) in enumerate(centers)
         ],
-        f"rank long, {id_col} long, radius double",
+        f"rank long, `{id_col}` long, radius double",
     )

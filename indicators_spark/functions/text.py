@@ -16,6 +16,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..utils import local_frame
+
 #: Marker stopwords per language for the n-gram/stopword-hit language-ID
 #: heuristic.  Deterministic tie-break: first language in this order wins.
 LANG_MARKERS: dict[str, tuple[str, ...]] = {
@@ -946,8 +948,8 @@ def bpe_learn_merges(
         pr, c = top[0]["pr"], int(top[0]["c"])
         merges.append((t, pr, pr.replace(" ", ""), c))
     spark = df.sparkSession
-    return spark.createDataFrame(
-        merges, "rank long, pair string, merged string, cnt long"
+    return local_frame(
+        spark, merges, "rank long, pair string, merged string, cnt long"
     )
 
 

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .queries import Query, _register  # noqa: F401  (used at registration)
 from .sources.prices import load_table
+from .utils import local_frame
 
 # NOTE: no module-level import from .queries_r9 — queries.py's tail
 # imports THIS module for registration side-effects, so an eager
@@ -496,7 +497,8 @@ def _median_selection_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     n, res = kth_elements(
         li, "l_extendedprice", fracs=[0.5, 0.9], final_rows=4096
     )
-    row = spark.createDataFrame(
+    row = local_frame(
+        spark,
         [(n, float(res[0.5]), float(res[0.9]))],
         "n long, median double, p90 double",
     )

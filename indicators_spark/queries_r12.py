@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from .queries import Query, _register
+from .utils import local_frame
 
 
 def _median_selection_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -337,7 +338,8 @@ def _weighted_median_selection_spark(
         li, "l_extendedprice", "l_quantity", fracs=[0.5, 0.9],
         final_rows=4096,
     )
-    row = spark.createDataFrame(
+    row = local_frame(
+        spark,
         [(total, float(res[0.5]), float(res[0.9]))],
         "total_w long, wmedian double, wp90 double",
     )

@@ -14,6 +14,7 @@ from . import queries_pipeline as _PIPE
 from .functions import sampling
 from .queries import Query, _r, _register
 from .sources.prices import load_table
+from .utils import local_frame
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -818,8 +819,10 @@ def _doremi_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         out.append(
             (r.source, r.n_docs, r.avg_ce, q4(ex[r.source]), q4(acc / DOREMI_T))
         )
-    return spark.createDataFrame(
-        out, "source string, n_docs long, avg_ce double, excess double, weight double"
+    return local_frame(
+        spark,
+        out,
+        "source string, n_docs long, avg_ce double, excess double, weight double",
     )
 
 
@@ -1980,8 +1983,8 @@ def _plan_execute_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         r["source"]: round(r["sample_rate"] * HASH_DEN)
         for r in plan.collect()
     }
-    spark_rates = spark.createDataFrame(
-        sorted(rates.items()), "source string, _thresh long"
+    spark_rates = local_frame(
+        spark, sorted(rates.items()), "source string, _thresh long"
     )
     sampled = (
         docs.join(F.broadcast(spark_rates), "source")

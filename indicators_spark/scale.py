@@ -42,6 +42,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .utils import local_frame
+
 
 def _halo_route(
     present: DataFrame,
@@ -1258,6 +1260,27 @@ def _table_walk(pdf, kk: int, err: str) -> float:
     return float(v[order][i])
 
 
+_NAN_KEY = float("nan")
+
+
+def _group_key(g):
+    """One shared object for every NaN group key.  Spark groups all NaNs
+    together, but ``nan != nan``, so a dict finds a NaN key only by
+    identity — each collected NaN is a fresh float and would miss."""
+    return _NAN_KEY if isinstance(g, float) and g != g else g
+
+
+def _group_slices(tbl) -> dict:
+    """``{group: rows}`` of a grouped value table (empty for ``None``).
+    ``dropna=False`` keeps the NaN group, which pandas' default drops."""
+    if tbl is None:
+        return {}
+    return {
+        _group_key(g): sub
+        for g, sub in tbl.groupby("_g", sort=False, dropna=False)
+    }
+
+
 def _residue_walk(pairs, kk: int, err: str) -> float:
     """Driver twin of the residue's ordered prefix sum: smallest value
     whose cumulative weight reaches ``kk`` over sorted (value, weight)
@@ -2134,6 +2157,10 @@ def _kth_by_group_impl(
     is exactly the historical unweighted kernel."""
     if (ks is None) == (frac is None):
         raise ValueError(f"{label}: pass exactly one of ks/frac")
+    if ks is not None:
+        ks = {_group_key(g): k for g, k in ks.items()}
+    if prior_stats is not None:
+        prior_stats = {_group_key(g): s for g, s in prior_stats.items()}
     v = F.col(value_col).cast("double")
     keep = v.isNotNull() & ~F.isnan(v) & F.col(group_col).isNotNull()
     if weight_col is None:
@@ -2151,7 +2178,8 @@ def _kth_by_group_impl(
         # per-group bounds/weights derive from it — and answers every
         # group without refinement rounds or a residue pass
         tbl = _collect_value_table(vals, True, DRIVER_TABLE_MAX_ROWS)
-    if tbl is not None and len(tbl):
+    by_g = _group_slices(tbl)
+    if by_g:
         derived = {
             g: (
                 float(sub["_v"].min()),
@@ -2160,7 +2188,7 @@ def _kth_by_group_impl(
                 int(sub["_c"].sum()),
                 int(sub["_mw"].min()),
             )
-            for g, sub in tbl.groupby("_g", sort=False)
+            for g, sub in by_g.items()
         }
         if prior_stats is not None:
             # the prior's group set stays authoritative (groups it
@@ -2177,7 +2205,7 @@ def _kth_by_group_impl(
     else:
         tbl = None
         stats = {
-            r["_g"]: (r["lo"], r["hi"], r["tw"], r["n"], r["mw"])
+            _group_key(r["_g"]): (r["lo"], r["hi"], r["tw"], r["n"], r["mw"])
             for r in vals.groupBy("_g")
             .agg(
                 F.min("_v").alias("lo"),
@@ -2234,8 +2262,8 @@ def _kth_by_group_impl(
             tbl = _collect_value_table(
                 vals.filter(F.col("_g").isin(list(want))), True, None
             )
+        by_g = _group_slices(tbl)
     if tbl is not None and want:
-        by_g = {g: sub for g, sub in tbl.groupby("_g", sort=False)}
         for g in want:
             sub = by_g.get(g)
             if sub is None or not len(sub):
@@ -2250,6 +2278,12 @@ def _kth_by_group_impl(
                 "— bookkeeping violated",
             )
 
+    # group dtype inherited from the input (a hardcoded string type would
+    # mangle integer group keys)
+    gtype = df.schema[group_col].dataType
+    gfield = T.StructField("_g", gtype)
+    dbl = T.DoubleType()
+
     def _interval_df(groups):
         # carry hi explicitly: filtering on lo + w*buckets could float-
         # drift below the true hi and silently drop boundary rows
@@ -2262,7 +2296,14 @@ def _kth_by_group_impl(
             )
             for g in groups
         ]
-        return spark.createDataFrame(rows, ["_g", "_lo", "_hi", "_w2"])
+        return local_frame(
+            spark,
+            rows,
+            T.StructType(
+                [gfield]
+                + [T.StructField(c, dbl) for c in ("_lo", "_hi", "_w2")]
+            ),
+        )
 
     for _ in range(max_iters):
         active = [
@@ -2297,7 +2338,7 @@ def _kth_by_group_impl(
             )
             .collect()
         ):
-            hist.setdefault(r["_g"], {})[r["_b"]] = (
+            hist.setdefault(_group_key(r["_g"]), {})[r["_b"]] = (
                 r["_cw"],
                 r["_n"],
                 r["_mn"],
@@ -2342,9 +2383,17 @@ def _kth_by_group_impl(
     # ONE shared residue pass for everything still unresolved
     pending = [g for g in state if g not in resolved]
     if pending:
-        iv3 = spark.createDataFrame(
+        iv3 = local_frame(
+            spark,
             [(g, state[g][0], state[g][1], want[g] - state[g][2]) for g in pending],
-            ["_g", "_lo", "_hi", "_kk"],
+            T.StructType(
+                [
+                    gfield,
+                    T.StructField("_lo", dbl),
+                    T.StructField("_hi", dbl),
+                    T.StructField("_kk", T.LongType()),
+                ]
+            ),
         )
         base = vals.join(F.broadcast(iv3), "_g").filter(
             (F.col("_v") >= F.col("_lo")) & (F.col("_v") <= F.col("_hi"))
@@ -2358,7 +2407,9 @@ def _kth_by_group_impl(
             for r in (
                 base.groupBy("_g", "_v").agg(F.sum("_w").alias("_c")).collect()
             ):
-                by_g.setdefault(r["_g"], []).append((r["_v"], r["_c"]))
+                by_g.setdefault(_group_key(r["_g"]), []).append(
+                    (r["_v"], r["_c"])
+                )
             for g in pending:
                 resolved[g] = _residue_walk(
                     sorted(by_g.get(g, [])),
@@ -2384,7 +2435,7 @@ def _kth_by_group_impl(
                 .collect()
             )
             for r in cells:
-                resolved[r["_g"]] = float(r["_ans"])
+                resolved[_group_key(r["_g"])] = float(r["_ans"])
     unresolved = [g for g in want if g not in resolved]
     if unresolved:
         raise RuntimeError(
@@ -2396,15 +2447,12 @@ def _kth_by_group_impl(
     rows = [
         (g, int(stats[g][2]), int(want[g]), resolved[g]) for g in sorted(want)
     ]
-    # group dtype inherited from the input (a hardcoded string type would
-    # mangle integer group keys)
-    gtype = df.schema[group_col].dataType
     schema = T.StructType(
         [
             T.StructField(group_col, gtype),
             T.StructField(out_fields[0], T.LongType()),
             T.StructField(out_fields[1], T.LongType()),
-            T.StructField("value", T.DoubleType()),
+            T.StructField("value", dbl),
         ]
     )
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)

@@ -1,5 +1,6 @@
-"""SparkSession factory tuned for the local[32] test environment while
-keeping cluster-honest defaults (AQE, UTC, Arrow)."""
+"""SparkSession factory: ``local[cores]`` on the host's cores (or
+``SPARK_GRAFT_CPUS``), with cluster-honest defaults (AQE, UTC, Arrow)
+and shuffle partitions sized to the core count."""
 
 from __future__ import annotations
 

@@ -17,8 +17,11 @@ parquet scan (only 5-6 of the source columns are read).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def _events_has_nanos(path: str) -> bool:
@@ -35,7 +38,6 @@ def _events_has_nanos(path: str) -> bool:
     ``ts`` field) falls back to False; a real footer-parse error
     propagates rather than being swallowed into the wrong read path."""
     import glob as _glob
-    import os
 
     import pyarrow.parquet as pq
 
@@ -58,6 +60,87 @@ def _events_has_nanos(path: str) -> bool:
     return getattr(schema.field("ts").type, "unit", None) == "ns"
 
 
+#: Session confs that change the schema Spark infers for a parquet path.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+
+class _SchemaEntry:
+    """What one parquet path's files decide: the footer nanos probe and
+    the schema Spark inferred under each set of inference confs."""
+
+    def __init__(self, files: tuple) -> None:
+        self.files = files
+        self.nanos: bool | None = None
+        self.schemas: dict[tuple, T.StructType] = {}
+
+
+#: Absolute path -> entry for its current files.  Every input that
+#: decides an inferred schema is part of the lookup (file stats, confs),
+#: so sharing the memo across callers and sessions changes only how many
+#: Spark jobs a read launches, never what it returns; a rewritten path
+#: replaces its entry, so the memo holds one entry per path read.
+_SCHEMA_MEMO: dict[str, _SchemaEntry] = {}
+
+
+def _file_stats(path: str) -> tuple | None:
+    """``(relative name, mtime_ns, size)`` of every file under ``path``
+    (the file itself for a single-file path), or ``None`` when
+    ``os.stat`` cannot see it (a remote URI, a missing path, a file
+    removed mid-listing)."""
+    try:
+        st = os.stat(path)
+        if not os.path.isdir(path):
+            return (("", st.st_mtime_ns, st.st_size),)
+        out = []
+        for root, dirs, files in os.walk(path):
+            dirs.sort()
+            for f in sorted(files):
+                fp = os.path.join(root, f)
+                st = os.stat(fp)
+                out.append((os.path.relpath(fp, path), st.st_mtime_ns, st.st_size))
+        return tuple(out)
+    except OSError:
+        return None
+
+
+def _read_parquet(
+    spark: SparkSession, path: str, probe_nanos: bool = False
+) -> DataFrame:
+    """``spark.read.parquet(path)`` without a schema-inference job when
+    the files under ``path`` and the inference confs are unchanged since
+    an earlier read: the schema Spark inferred then is passed to the
+    reader.  ``probe_nanos`` first sets the legacy ``nanosAsLong`` conf
+    when the file stores ``ts`` as TIMESTAMP(NANOS) (see load_table);
+    the footer probe result is memoized with the schema."""
+    files = _file_stats(path)
+    if files is None:
+        if probe_nanos and _events_has_nanos(path):
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        return spark.read.parquet(path)
+    key = os.path.abspath(path)
+    entry = _SCHEMA_MEMO.get(key)
+    if entry is None or entry.files != files:
+        entry = _SCHEMA_MEMO[key] = _SchemaEntry(files)
+    if probe_nanos:
+        if entry.nanos is None:
+            entry.nanos = _events_has_nanos(path)
+        if entry.nanos:
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    confs = tuple(spark.conf.get(c) for c in _INFERENCE_CONFS)
+    schema = entry.schemas.get(confs)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    entry.schemas[confs] = df.schema
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # The test parquet stores NAIVE timestamps (isAdjustedToUTC=false),
     # which Spark interprets in the *session* timezone; the DuckDB oracle
@@ -75,9 +158,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # parquet read in the session decodes TIMESTAMP(NANOS) columns, so
         # probe the footer first (driver-side, a few KB) and flip it only
         # when this file actually stores nanos.
-        if _events_has_nanos(f"{sf_dir}/events.parquet"):
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+        ev = _read_parquet(spark, f"{sf_dir}/events.parquet", probe_nanos=True)
         ts_type = dict(ev.dtypes).get("ts")
         if ts_type == "bigint":
             ev = ev.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
@@ -90,7 +171,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # (matches EVENTS_SCHEMA in streaming/windows.py).
             ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
         return ev
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return _read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def prices_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:

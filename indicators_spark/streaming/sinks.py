@@ -42,6 +42,9 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from ..utils import local_frame
 
 
 def _run_ns(run_id: str | None) -> str:
@@ -154,6 +157,15 @@ def _atomic_write(path: str, body: str) -> None:
     with open(tmp, "w") as f:
         f.write(body)
     os.rename(tmp, path)
+
+
+def _read_store(
+    spark: SparkSession, paths: list[str], schema: StructType
+) -> DataFrame | None:
+    """The store directories a dedup sink wrote itself, read with the
+    schema of the library frame that produced them (no schema-inference
+    job per epoch); ``None`` while the store is empty."""
+    return spark.read.schema(schema).parquet(*paths) if paths else None
 
 
 class _EpochLedger:
@@ -483,7 +495,7 @@ class UpsertParquetSink:
             # epoch 0 seeds through the SAME merge (latest-wins incl. the
             # deterministic whole-row tie-break) against an empty target —
             # one dedup semantics from the first epoch on
-            target = spark.createDataFrame([], batch_df.schema)
+            target = local_frame(spark, [], batch_df.schema)
         else:
             target = spark.read.parquet(os.path.join(self.store_dir, cur[0]))
         merged = merge_upsert(target, batch_df, self.key, self.order_col)
@@ -575,8 +587,8 @@ class SubstringDedupIngestSink(_EpochLedger):
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        store_paths = self._store_paths()
-        store = spark.read.parquet(*store_paths) if store_paths else None
+        grams = batch_gram_hashes(batch_df, self.n)
+        store = _read_store(spark, self._store_paths(), grams.schema)
         spans = substring_dedup_incremental_policy(batch_df, store, self.n)
         cleaned = cut_spans(batch_df, spans)
         epoch_tag = self._epoch_tag(epoch_id)
@@ -586,7 +598,7 @@ class SubstringDedupIngestSink(_EpochLedger):
         # grams land BEFORE the commit mark: a crash in between leaves an
         # uncommitted gram dir that readers (ledger-trusting) never see
         # and the replay overwrites wholesale
-        batch_gram_hashes(batch_df, self.n).write.mode("overwrite").parquet(
+        grams.write.mode("overwrite").parquet(
             os.path.join(self.gram_dir, epoch_tag)
         )
         self._mark_committed(epoch_id)
@@ -666,7 +678,8 @@ class MixturePlanSink(_EpochLedger):
         os.makedirs(self.acct_dir, exist_ok=True)
 
     def _rate_df(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             sorted(self.thresholds.items()),
             f"`{self.source_col}` string, _thresh long",
         )
@@ -765,8 +778,8 @@ class MixturePlanSink(_EpochLedger):
         achieved-vs-planned columns."""
         from ..functions.sampling import HASH_DEN
 
-        planned = spark.createDataFrame(
-            sorted(self.thresholds.items()), "source string, _thresh long"
+        planned = local_frame(
+            spark, sorted(self.thresholds.items()), "source string, _thresh long"
         )
         cum = self.read_accounting(spark).groupBy("source").agg(
             F.sum("total_docs").cast("long").alias("total_docs"),
@@ -901,17 +914,15 @@ class MinHashDedupIngestSink(_EpochLedger):
         # per epoch; the ledger still gates visibility — an uncommitted
         # band dir is invisible to _store_paths and a replay overwrites
         # it wholesale
-        batch_band_keys(batch_df, bands=self.bands).write.mode(
-            "overwrite"
-        ).parquet(band_path)
-        store_paths = self._store_paths()
-        store = spark.read.parquet(*store_paths) if store_paths else None
+        band_keys = batch_band_keys(batch_df, bands=self.bands)
+        band_keys.write.mode("overwrite").parquet(band_path)
+        schema = band_keys.schema
         flagged = minhash_dedup_against_corpus(
             batch_df,
-            store,
+            _read_store(spark, self._store_paths(), schema),
             bands=self.bands,
             min_bands=self.min_bands,
-            batch_bands=spark.read.parquet(band_path),
+            batch_bands=_read_store(spark, [band_path], schema),
         )
         flagged.write.mode("overwrite").parquet(
             os.path.join(self.data_dir, epoch_tag)
@@ -988,8 +999,8 @@ class LineDedupIngestSink(_EpochLedger):
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        store_paths = self._store_paths()
-        store = spark.read.parquet(*store_paths) if store_paths else None
+        counts = batch_line_counts(batch_df)
+        store = _read_store(spark, self._store_paths(), counts.schema)
         cleaned = line_dedup_incremental(
             batch_df, store, min_df=self.min_df
         )
@@ -998,7 +1009,7 @@ class LineDedupIngestSink(_EpochLedger):
             os.path.join(self.data_dir, epoch_tag)
         )
         # counts land BEFORE the commit mark (see SubstringDedupIngestSink)
-        batch_line_counts(batch_df).write.mode("overwrite").parquet(
+        counts.write.mode("overwrite").parquet(
             os.path.join(self.count_dir, epoch_tag)
         )
         self._mark_committed(epoch_id)

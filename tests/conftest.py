@@ -85,6 +85,11 @@ def ohlcv(spark):
     )
 
 
+#: tier name, set at collection
+_TIER = pytest.StashKey[str]()
+_BATTERY = "test_oracle_parity.py"
+
+
 def pytest_collection_modifyitems(config, items):
     """Two-tier suite (VERDICT r13 #8): the 274-query oracle-parity
     battery (tests/test_oracle_parity.py) takes ~15-25 min alone and
@@ -94,16 +99,30 @@ def pytest_collection_modifyitems(config, items):
     explicitly (`pytest tests/test_oracle_parity.py`, the /verify
     recipe) or `SPARK_GRAFT_PARITY=1` is set.  The per-round focused
     parity files (test_oracle_parity_r*.py) stay in the fast tier."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_PARITY"):
+    if os.environ.get("SPARK_GRAFT_PARITY") or any(
+        _BATTERY in a for a in config.args
+    ):
+        config.stash[_TIER] = "parity (oracle battery included)"
         return
-    if any("test_oracle_parity.py" in a for a in config.args):
-        return
+    config.stash[_TIER] = "fast (oracle battery skipped)"
     skip = pytest.mark.skip(
         reason="oracle battery tier: run tests/test_oracle_parity.py "
         "directly or set SPARK_GRAFT_PARITY=1"
     )
     for item in items:
-        if item.fspath.basename == "test_oracle_parity.py":
+        if item.fspath.basename == _BATTERY:
             item.add_marker(skip)
+
+
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    """Say which tier ran, so a green fast-tier run is never mistaken
+    for a parity-battery run."""
+    skipped = sum(
+        1
+        for r in terminalreporter.stats.get("skipped", [])
+        if _BATTERY + "::" in getattr(r, "nodeid", "")
+    )
+    terminalreporter.write_line(
+        f"test tier: {config.stash.get(_TIER, 'fast')}; "
+        f"parity-battery tests skipped: {skipped}"
+    )
